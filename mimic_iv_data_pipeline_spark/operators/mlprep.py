@@ -212,9 +212,9 @@ def target_encode_kfold(
     ``hash_fn`` picks the fold hash: ``'md5'`` (default) is the
     engine-neutral convention every SQL oracle can mirror;
     ``'xxhash64'`` is the production fast path — measured 20× cheaper
-    per pass at 15M rows (12.3 s vs 0.6 s, scale_probes_r5c), same
-    content-addressed stability, just not expressible in DuckDB. Same
-    seam as ``hyperplane_signature(plane_hash=...)``.
+    per pass at 15M rows (12.3 s vs 0.6 s; PERF.md, "r5 third-wave
+    probes"), same content-addressed stability, just not expressible in
+    DuckDB. Same seam as ``hyperplane_signature(plane_hash=...)``.
 
     Scale shape: ONE (cat, fold) aggregate (≤ |cats|·k rows) plus a
     k-row fold aggregate and a 1-row global — all broadcast back onto
@@ -242,7 +242,7 @@ def target_encode_kfold(
     # that ≤|cats|·k-row relation (margins-from-the-joint, same trick
     # as mutual_information) — without this, gf/g each rescanned the
     # facts and recomputed the md5 fold per row (measured 45 s → 23 s
-    # at 15M rows, scale_probes_r5c).
+    # at 15M rows; PERF.md, "r5 third-wave probes").
     cf = base.groupBy(cat_col, fold_col).agg(
         F.sum("__y").alias("__s_cf"), F.count(F.lit(1)).alias("__c_cf")
     ).transform(materialize)

@@ -12,6 +12,7 @@ restarts) exactly where the reference wrote its files (SURVEY.md §3).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +100,18 @@ def _collect_feature_vocab(dense: DataFrame, cap: int = 50_000) -> list:
     return [r["itemid"] for r in rows]
 
 
+@contextmanager
+def _job_label(sc, description: str):
+    """Label the jobs this thread submits (descriptions are thread-local)
+    so Spark's event log and UI attribute the pipeline's wall per stage.
+    The second word of every label is the stage name."""
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
+
+
 def run_pipeline(
     spark: SparkSession,
     tables: dict[str, DataFrame],
@@ -167,11 +180,8 @@ def run_pipeline(
 
     def _boundary(df: DataFrame, name: str) -> DataFrame:
         """Multi-consumer stage boundary: parquet round-trip or an
-        in-memory materialization (computed once either way). Jobs are
-        labelled per stage (guide §1.5) so the UI/REST timeline
-        attributes the pipeline's wall to stages, not anonymous actions."""
-        sc.setJobDescription(f"pipeline: {name} boundary ({handoff})")
-        try:
+        in-memory materialization (computed once either way)."""
+        with _job_label(sc, f"pipeline: {name} boundary ({handoff})"):
             if handoff == "parquet":
                 df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
                 # Re-read with the schema we just wrote (nullable-
@@ -187,8 +197,6 @@ def run_pipeline(
             from mimic_iv_data_pipeline_spark.engine import materialize
 
             return materialize(df)
-        finally:
-            sc.setJobDescription(None)
 
     def _leaf(df: DataFrame, name: str) -> DataFrame:
         """Terminal stage: written in parquet mode (asynchronously — the
@@ -198,21 +206,15 @@ def run_pipeline(
 
             def _write(d=df, n=name):
                 # descriptions are thread-local: label inside the pool thread
-                sc.setJobDescription(f"pipeline: {n} leaf write")
-                try:
+                with _job_label(sc, f"pipeline: {n} leaf write"):
                     d.write.mode("overwrite").parquet(os.path.join(out_dir, n))
-                finally:
-                    sc.setJobDescription(None)
 
             leaf_futures.append(pool.submit(_write))
         elif leaf_consumer is not None:
 
             def _consume(d=df, n=name):
-                sc.setJobDescription(f"pipeline: {n} leaf consume")
-                try:
+                with _job_label(sc, f"pipeline: {n} leaf consume"):
                     leaf_consumer(d, n)
-                finally:
-                    sc.setJobDescription(None)
 
             leaf_futures.append(pool.submit(_consume))
         return df
@@ -297,9 +299,10 @@ def _run_pipeline_body(
     )
     dense = _boundary(dense, "timeseries")
 
-    codes = cfg.feature_codes or _collect_feature_vocab(
-        dense, cap=cfg.max_feature_vocab
-    )
+    codes = cfg.feature_codes
+    if not codes:
+        with _job_label(spark.sparkContext, "pipeline: vocab collect"):
+            codes = _collect_feature_vocab(dense, cap=cfg.max_feature_vocab)
     features = _leaf(
         ml_feature_matrix(dense, id_col=id_col, feature_codes=codes, agg="mean"),
         "features",

@@ -223,6 +223,37 @@ def test_feature_vocab_cap(spark):
     assert sorted(_collect_feature_vocab(small, cap=10)) == [0, 1, 2, 3, 4]
 
 
+def test_run_pipeline_labels_vocab_collect(spark, mimic_fixture, tmp_path, monkeypatch):
+    """The feature-vocab collect runs under a ``pipeline: vocab ...``
+    job description like every boundary and leaf, so the event log
+    attributes its job to a stage; the label is cleared afterwards."""
+    from mimic_iv_data_pipeline_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    seen = []
+    original = pipeline._collect_feature_vocab
+
+    def spy(dense, cap):
+        seen.append(sc.getLocalProperty("spark.job.description"))
+        return original(dense, cap=cap)
+
+    monkeypatch.setattr(pipeline, "_collect_feature_vocab", spy)
+    pipeline.run_pipeline(
+        spark,
+        {
+            "visits": mimic_fixture["icustays"],
+            "patients": mimic_fixture["patients"],
+            "admissions": mimic_fixture["admissions"],
+            "events": mimic_fixture["chartevents"],
+        },
+        str(tmp_path / "unused"),
+        pipeline.PipelineConfig(include_hours=24, bucket_hours=2),
+        handoff="memory",
+    )
+    assert len(seen) == 1 and (seen[0] or "").startswith("pipeline: vocab"), seen
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
 def test_run_pipeline_handoff_modes_value_equal(spark, mimic_fixture, tmp_path):
     """handoff="memory" (localCheckpoint boundaries, lazy leaves) must
     produce byte-for-byte the same stage relations as the default

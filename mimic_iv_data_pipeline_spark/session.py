@@ -6,11 +6,24 @@ The reference pipeline hand-manages memory with chunked pandas scans
 the engine's job; what we own is the configuration: AQE on (runtime
 coalesce + skew-join handling), Arrow for the pandas boundary, UTC
 session time zone so timestamp semantics are stable across engines.
+
+Sessions from ``get_spark`` also stop promptly. ``SparkContext.stop()``
+ends by shutting down PySpark's accumulator server, which on its own
+returns only when the server's thread next wakes from a poll: up to
+0.5 s when idle, and up to 1 s once any Python-worker job
+(``mapInPandas``, pandas UDFs, ``foreach``) has left the JVM's
+accumulator connection open. ``get_spark`` has that shutdown wake the
+thread instead, so a notebook that stops and rebuilds sessions does not
+wait out either poll.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
+import socket
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -98,4 +111,71 @@ def get_spark(app_name: str = "mimic_iv_data_pipeline_spark", **overrides: str) 
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _prompt_shutdown(spark.sparkContext._accumulatorServer)
     return spark
+
+
+class _PromptShutdown:
+    """Mixed into PySpark's accumulator server: ``shutdown()`` wakes the
+    server thread wherever it blocks instead of waiting out its poll.
+
+    The thread serves one connection at a time. Idle, it sits in
+    ``serve_forever``'s 0.5 s select on the listening socket; while the
+    JVM holds its connection open, it sits in the request handler's 1 s
+    select on that connection.
+    """
+
+    _open_request: socket.socket | None = None
+
+    def finish_request(self, request, client_address):
+        self._open_request = request
+        try:
+            super().finish_request(request, client_address)
+        finally:
+            self._open_request = None
+
+    def handle_error(self, request, client_address):
+        # Once shutdown has begun, the handler's read ends on the EOF
+        # that shutdown() causes below; any other error is still reported.
+        if self.server_shutdown and isinstance(sys.exc_info()[1], EOFError):
+            return
+        super().handle_error(request, client_address)
+
+    def shutdown(self):
+        # No accumulator update can be lost: SparkContext.stop() stops the
+        # JVM before it shuts this server down, and the JVM waits for an
+        # ack byte after every merge, so no update is pending here.
+        self.server_shutdown = True
+        # BaseServer.shutdown() only sets this flag and then waits; set it
+        # first so the woken serve loop breaks instead of accepting the
+        # wake-up connection.
+        self._BaseServer__shutdown_request = True
+        # The handler's select on the JVM's connection returns once its
+        # read side is shut (the read then hits EOF); serve_forever's
+        # select returns once a connection arrives.
+        request = self._open_request
+        if request is not None:
+            with contextlib.suppress(OSError):
+                request.shutdown(socket.SHUT_RD)
+        with contextlib.suppress(OSError), socket.socket(
+            self.address_family, self.socket_type
+        ) as wake:
+            wake.connect(self.server_address)
+        super().shutdown()
+
+
+@functools.cache
+def _prompt_class(server_class: type) -> type:
+    return type(server_class.__name__, (_PromptShutdown, server_class), {})
+
+
+def _prompt_shutdown(server) -> None:
+    """Make a live accumulator server's ``shutdown()`` prompt; a server
+    that already is (``get_spark`` on a live session) is left alone.
+
+    A connection the server accepted before this call is not tracked, so
+    on a session built elsewhere that already ran Python workers, its
+    handler's poll is still waited out once.
+    """
+    if not isinstance(server, _PromptShutdown):
+        server.__class__ = _prompt_class(type(server))

@@ -269,10 +269,11 @@ def geo_clusters(
     routing probe and the kept path observe one computation) + the
     radius join's bounded candidate generation; the collapse adds a
     rep join and a witness-dedup aggregate but caps CC's input.
-    ``driver_cap`` passes through to CC's union-find fast path (4M
-    default = 64 MB Arrow collect). The collapse is guarded to
-    radius ≤ 100 km (the small-angle bound that makes the in-cell
-    diagonal airtight); larger radii always take the full-pair path.
+    ``driver_cap`` is CC's union-find cap (4M default = 64 MB Arrow
+    collect); CC picks its own path from the edge count it observes.
+    The collapse is guarded to radius ≤ 100 km (the small-angle bound
+    that makes the in-cell diagonal airtight); larger radii always take
+    the full-pair path.
     Dense blobs still cost k² CANDIDATES inside the radius join
     (shrink the radius or pre-aggregate co-located points upstream) —
     but no longer k² CC edges. Returns ``(id, cluster_id)``.
@@ -310,7 +311,6 @@ def geo_clusters(
             "id_b",
             nodes=points.select(F.col(id_col).alias("id")),
             driver_cap=driver_cap,
-            local_contract=True,
         )
         return comp.select(F.col("id"), F.col("component").alias("cluster_id"))
 
@@ -376,7 +376,6 @@ def geo_clusters(
             "id_b",
             nodes=points.select(F.col(id_col).alias("id")),
             driver_cap=driver_cap,
-            local_contract=True,
         )
         return comp.select(F.col("id"), F.col("component").alias("cluster_id"))
     # collapse path: pin the histogram (it feeds the rep join below —
@@ -416,8 +415,5 @@ def geo_clusters(
         "id_b",
         nodes=points.select(F.col(id_col).alias("id")),
         driver_cap=driver_cap,
-        # the collapsed edge relation is tiny (|V| stars + witness
-        # pairs); local contraction still helps when cells cluster
-        local_contract=True,
     )
     return comp.select(F.col("id"), F.col("component").alias("cluster_id"))

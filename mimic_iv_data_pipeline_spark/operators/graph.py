@@ -12,19 +12,19 @@ join rounds over the edge list, and the edge set contracts toward star
 graphs centered on each component's minimum id in O(log²) rounds
 regardless of graph diameter — unlike naive min-label propagation,
 whose round count is the graph *diameter* (a 10k-doc chain of
-near-dups would need 10k shuffles; this needs ~a dozen). An opt-in
-zero-shuffle partition-local union-find contraction (``mapInPandas``,
-``local_contract=True``) runs before the first round — the classic
-two-phase local-contract/global-resolve shape. It pays off exactly
-when the edge relation arrives PARTITION-CLUSTERED (geo candidates
-grouped by cell, LSH pairs grouped by bucket): whole clusters collapse
-to stars locally — 7 rounds -> 1 and 3.5x wall-clock on the 6M-edge
-blob probe (PERF r8). On uncorrelated layouts it is a measured ~1%
-pure loss, but buys nothing, so the default stays off. Each
-iteration is ``localCheckpoint``-ed to truncate lineage, which is what
-keeps the plan from growing exponentially in an iterative Spark job;
-on a long-running cluster with executor loss you'd swap in reliable
-``checkpoint()`` with a durable checkpoint dir.
+near-dups would need 10k shuffles; this needs ~a dozen). Graphs whose
+canonical edge set fits under a driver cap skip the rounds for a
+driver-side union-find. Above the cap, a zero-shuffle partition-local
+union-find contraction (``mapInPandas``) runs once first — the classic
+two-phase local-contract/global-resolve shape. It pays off most when
+the edge relation arrives PARTITION-CLUSTERED (geo candidates grouped
+by cell, LSH pairs grouped by bucket): whole clusters collapse to
+stars locally — 7 rounds -> 1 and 3.5x wall-clock on the 6M-edge blob
+probe (PERF r8). Each star iteration is ``localCheckpoint``-ed to
+truncate lineage, which is what keeps the plan from growing
+exponentially in an iterative Spark job; on a long-running cluster
+with executor loss you'd swap in reliable ``checkpoint()`` with a
+durable checkpoint dir.
 """
 
 from __future__ import annotations
@@ -202,7 +202,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     max_iter: int = 25,
     driver_cap: int = 4_000_000,
-    local_contract: bool | str = "auto",
 ) -> DataFrame:
     """Connected components of an undirected pair list.
 
@@ -212,65 +211,39 @@ def connected_components(
     singleton components; without it only ids appearing in ``pairs``
     are labeled.
 
-    **Small-graph fast path**: near-dup edge lists are tiny relative to
-    the corpus they came from (pairs that survived a Jaccard/MinHash
-    threshold), so when the canonical edge set fits under
-    ``driver_cap`` edges (bounded-collect via ``limit(cap+1)`` — the
-    same guard pattern as ``similarity.cosine_topk_pandas`` and the IVF
-    driver-trained quantizer) the closure runs as an O(E α(E))
-    union-find on the driver instead of ~8 shuffle stages per
-    star-algorithm round. The collect is Arrow-batched (``toPandas``),
-    so a long-id edge hits the driver at 16 bytes, not a ~150-byte
-    ``Row``: the default 4M-edge cap is a 64 MB transfer plus a
-    union-find dict peaking at a few hundred MB — seconds on any
-    driver, vs ~60 s of star rounds at the 1.4M-edge geo probe (PERF
-    r6d/r7). The cap is DRIVER-RAM-bound, not crossover-bound: at 6M
-    edges / 3M nodes union-find still beats the star path 2x (PERF
-    r7b), so callers with roomy drivers can raise it well past the
-    default — size it DOWN on small drivers or for wide string ids;
-    set ``driver_cap=0`` to force the distributed path. Graphs above
-    the cap take the star path automatically, so the operator stays
-    100 TB-correct with no caller change — the bounded collect IS the
-    auto-switch (it observes the true edge count, never an estimate).
+    One rule picks the path, driven only by what the operator observes:
 
-    ``local_contract`` controls a zero-exchange partition-local
-    union-find over the RAW pair relation before canonicalization,
-    replacing each partition's edges with its star forest. ``True``
-    always pre-contracts — right when the producer emits pairs
-    partition-clustered by component locality: geo candidates grouped
-    by grid cell (:func:`~.geo.geo_clusters` passes it), pairs still
-    carrying their LSH band-bucket layout — where whole clusters
-    collapse locally (7 star rounds -> 1 and 3.5x wall-clock on the
-    6M-edge blob probe, PERF r8). The r9 layout probes showed the win
-    is NOT layout-only: even after the producer layout is destroyed by
-    a (id_a, id_b) hash shuffle (the trailing ``distinct`` every
-    dedup pair producer ends with), contraction still buys 1.3x on the
-    star path for duplicate-blob graphs via per-partition path
-    shortening; the only measured loss is sparse UNCORRELATED graphs
-    (~1%, PERF r8). ``"auto"`` (the default) therefore defers the
-    decision to the one signal the operator can observe for free:
-    the bounded driver collect. Small graphs take the driver fast
-    path off the raw edge set — zero contraction overhead; only when
-    the raw set overflows ``driver_cap`` does auto contract once and
-    retry (the forest is never larger and may now fit — a new escape
-    hatch mid-size graphs didn't have), falling through to the star
-    loop ON THE CONTRACTED FOREST when even that overflows. With
-    ``driver_cap=0`` (forced distributed) auto buys its signal with
-    one count job and contracts only above ~1M edges — the r9 sf1
-    probe measured a 3.2x LOSS forcing contraction over a 2.6k-pair
-    sparse set, vs the 1.3-4.6x win at 6M blob edges. ``False``
-    never contracts. The auto retry re-executes the producer lineage
-    once (the contraction is a different plan than the collected
-    canonical set); at >cap edge counts that recompute is noise next
-    to the star rounds it replaces.
+    1. **Driver union-find** when the canonical edge set fits under
+       ``driver_cap`` edges. A bounded, Arrow-batched collect
+       (``limit(cap+1).toPandas()``, ~16 bytes per long-id edge) sees
+       the whole set, and the closure runs as an O(E α(E)) union-find
+       instead of ~8 shuffle stages per star round: the default 4M
+       cap is a 64 MB transfer — seconds, vs ~60 s of star rounds at
+       the 1.4M-edge geo probe (PERF r6d/r7). The cap is
+       DRIVER-RAM-bound, not crossover-bound (union-find still wins 2x
+       at 6M edges, PERF r7b): size it DOWN on small drivers or for
+       wide string ids.
+    2. **Contract once and retry** when the collect overflows: a
+       zero-exchange partition-local union-find over the RAW pairs
+       replaces each partition's edges with its star forest, which is
+       never larger and collapses duplicate-rich structure (3.5x on
+       the 6M-edge blob probe, PERF r8), so it may now fit. The retry
+       re-executes the producer lineage once — noise next to the star
+       rounds it saves.
+    3. **Star rounds on the contracted forest** when even the forest
+       overflows, so the operator stays 100 TB-correct with no caller
+       change — the bounded collect IS the switch (it observes the
+       true edge count, never an estimate).
+    4. ``driver_cap=0`` (tests only) runs the star rounds on the raw
+       canonical edges.
 
-    On the distributed path, convergence is detected on the canonical edge set with ONE
-    aggregate job per round — ``(count, xor-of-hashes)`` as a cheap
-    set signature — and a single ``exceptAll`` confirmation when the
-    signature repeats, so the exact-fixpoint guarantee costs one extra
-    job total instead of one per round. ``max_iter`` is a safety valve
-    far above the O(log²) bound, and hitting it raises rather than
-    silently mislabeling.
+    On the star path, convergence is detected on the canonical edge
+    set with ONE aggregate job per round — ``(count, xor-of-hashes)``
+    as a cheap set signature — and a single ``exceptAll`` confirmation
+    when the signature repeats, so the exact-fixpoint guarantee costs
+    one extra job total instead of one per round. ``max_iter`` is a
+    safety valve far above the O(log²) bound, and hitting it raises
+    rather than silently mislabeling.
     """
 
     def signature(df: DataFrame) -> tuple[int, int]:
@@ -284,52 +257,19 @@ def connected_components(
         ).collect()[0]
         return row.n, row.h
 
-    # identity/type validation, not membership: `1 in (True, False, "auto")`
-    # is True (1 == True in Python) but `1 is True` is False, so an int 1
-    # would pass a membership check yet silently behave as False below
-    if not (
-        local_contract is True
-        or local_contract is False
-        or local_contract == "auto"
-    ):
-        raise ValueError(
-            f"local_contract must be True, False or 'auto', got {local_contract!r}"
-        )
     raw = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nonnull = raw.where(F.col("u").isNotNull() & F.col("v").isNotNull())
-    if local_contract == "auto" and not driver_cap:
-        # forced-distributed + auto: no bounded collect will run, so
-        # buy the decision signal with one count job (noise next to the
-        # per-round signature jobs the star loop runs anyway). Small
-        # sparse pair sets must NOT contract: the r9 sf1 probe measured
-        # a 3.2x LOSS forcing contraction over 2.6k pairs (the Python
-        # boundary with nothing to collapse), vs the 1.3-4.6x win at 6M
-        # blob edges. 1M edges ~ the scale where star rounds start to
-        # dominate and per-partition structure exists.
-        local_contract = (
-            True if nonnull.count() > 1_000_000 else False
-        )
-    if local_contract is True:
-        # contract BEFORE _canon: the canonicalizing distinct re-shuffles
-        # by (u, v) hash, which would destroy any producer
-        # partition-clustering (geo cells, LSH buckets) the contraction
-        # exploits best. The union-find is indifferent to duplicates,
-        # order, and self-loops; NULL-id pairs are dropped here as
-        # _canon would have dropped them. Both downstream paths benefit:
-        # the star loop starts from the contracted forest, and the
-        # driver fast path Arrow-collects the (smaller) forest.
-        raw = _local_contract(nonnull)
     edges = _canon(raw)
 
     if driver_cap:
         head = edges.limit(driver_cap + 1).toPandas()  # Arrow, ~16 B/long edge
-        if len(head) > driver_cap and local_contract == "auto":
-            # auto: the raw canonical set overflows the cap — contract
-            # once and retry. The star forest is never larger than the
-            # edge set and collapses duplicate-rich structure, so it
-            # may fit where the raw set did not; if it still doesn't,
-            # the star loop below starts from the contracted forest
-            # (1.3-3.5x fewer/cheaper rounds on blob graphs, PERF r9).
+        if len(head) > driver_cap:
+            # contract the RAW pairs, before _canon: the canonicalizing
+            # distinct re-shuffles by (u, v) hash, which would destroy
+            # any producer partition-clustering (geo cells, LSH buckets)
+            # the contraction exploits best. The union-find is
+            # indifferent to duplicates, order and self-loops; NULL-id
+            # pairs are dropped here as _canon drops them.
+            nonnull = raw.where(F.col("u").isNotNull() & F.col("v").isNotNull())
             edges = _canon(_local_contract(nonnull))
             head = edges.limit(driver_cap + 1).toPandas()
         if len(head) <= driver_cap:  # bounded collect saw the WHOLE set
@@ -407,24 +347,17 @@ def dedup_keep_canonical(
     id_col: str = "doc_id",
     src: str = "id_a",
     dst: str = "id_b",
-    local_contract: bool | str = "auto",
 ) -> DataFrame:
     """Corpus-level near-dup removal: keep the minimum-id document of
     every connected component of ``pairs`` (the C4/Dolma "keep one per
     cluster" step). Non-clustered documents pass through untouched —
     the labels join is an equi-join on the id, broadcast when the
-    cluster set is small.
-
-    ``local_contract`` passes through to :func:`connected_components`:
-    the ``"auto"`` default contracts only when the pair set overflows
-    the driver cap — free for the common small-pair-set case, and a
-    measured 1.3x star-path win on duplicate-blob pair sets even AFTER
-    the producer's band/bucket layout has been destroyed by the
-    trailing (id_a, id_b) distinct (PERF r9 layout probes). Pass
-    ``True`` when ``pairs`` still carries producer partitioning (a
-    banded LSH join consumed before any distinct), ``False`` for
-    sparse uncorrelated graphs (~1% contraction loss)."""
-    labels = connected_components(pairs, src, dst, local_contract=local_contract)
+    cluster set is small. :func:`connected_components` picks its own
+    path from the pair count; a pair set over its driver cap is
+    contracted partition-locally first (a measured 1.3x star-path win
+    on duplicate-blob pair sets even after the producer's trailing
+    (id_a, id_b) distinct, PERF r9 layout probes)."""
+    labels = connected_components(pairs, src, dst)
     keep = labels.where(F.col("id") == F.col("component")).select("id")
     clustered = labels.select("id")
     return (

@@ -211,23 +211,16 @@ def _funnel_frontiers(
     user_col: str,
     ts_col: str,
     type_col: str,
-    materialize_steps: bool = True,
 ) -> list[DataFrame]:
     """Shared funnel recurrence: per stage i, the (user, reach-time)
     frontier of users who completed stages 0..i in order, with the
     earliest qualifying stage-i time.
 
-    ``materialize_steps=True`` localCheckpoints each frontier (same
-    discipline as pagerank/connected_components): step i+1 joins a
-    materialized |users|-row relation instead of re-deriving the whole
-    chain — the right shape when the caller consumes frontiers through
-    SEVERAL actions. With ``False`` the frontiers stay lazy nested
-    broadcast-join plans; a caller that consumes all of them in ONE
-    action (funnel_conversion's fused count) relies on Spark's
-    ReuseExchange: frontier i's broadcast subtree is canonically
-    identical everywhere it appears, so each stage's type-filtered
-    event pass still runs exactly once per action — with zero eager
-    driver round-trips during construction.
+    Each frontier is localCheckpointed (same discipline as
+    pagerank/connected_components): step i+1 joins a materialized
+    |users|-row relation instead of re-deriving the whole chain, so
+    each stage's type-filtered event pass runs exactly once at any
+    scale.
     """
     if not stages:
         raise ValueError("stages must be non-empty")
@@ -238,22 +231,20 @@ def _funnel_frontiers(
         F.col(ts_col).alias("__ts"),
         F.col(type_col).alias("__t"),
     )
-    frontier = ev.filter(F.col("__t") == stages[0]).groupBy("__u").agg(
-        F.min("__ts").alias("__reach")
+    frontier = materialize(
+        ev.filter(F.col("__t") == stages[0])
+        .groupBy("__u")
+        .agg(F.min("__ts").alias("__reach"))
     )
-    if materialize_steps:
-        frontier = materialize(frontier)
     frontiers = [frontier]
     for s in stages[1:]:
-        frontier = (
+        frontier = materialize(
             ev.filter(F.col("__t") == s)
             .join(F.broadcast(frontier), "__u")
             .filter(F.col("__ts") >= F.col("__reach"))
             .groupBy("__u")
             .agg(F.min("__ts").alias("__reach"))
         )
-        if materialize_steps:
-            frontier = materialize(frontier)
         frontiers.append(frontier)
     return frontiers
 
@@ -305,9 +296,7 @@ def funnel_conversion(
     # min-of-6 at sf0.1: fused-counts 0.726 s vs stepped 0.780 s.
     # Counts are deterministic — values identical to the stepped form
     # (pinned by tests/test_r12_s3.py).
-    fronts = _funnel_frontiers(
-        events, stages, user_col, ts_col, type_col, materialize_steps=True
-    )
+    fronts = _funnel_frontiers(events, stages, user_col, ts_col, type_col)
     count_parts = [
         f.groupBy()
         .agg(F.count(F.lit(1)).alias("__users"))

@@ -242,11 +242,16 @@ def test_connected_components_without_nodes_labels_roots(spark, driver_cap):
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
 
 
-def test_connected_components_random_graphs(spark):
+def test_connected_components_random_graphs(spark, monkeypatch):
     import random
 
-    from mimic_iv_data_pipeline_spark.operators.graph import connected_components
+    from mimic_iv_data_pipeline_spark.operators import graph
 
+    contracted = []
+    real = graph._local_contract
+    monkeypatch.setattr(
+        graph, "_local_contract", lambda e: contracted.append(1) or real(e)
+    )
     rng = random.Random(7)
     for trial in range(4):
         n = 60
@@ -262,21 +267,22 @@ def test_connected_components_random_graphs(spark):
         cap = 0 if trial % 2 else 1_000_000  # alternate star/driver paths
         got = {
             r["id"]: r["component"]
-            for r in connected_components(
+            for r in graph.connected_components(
                 pairs, nodes=nodes_df, driver_cap=cap
             ).collect()
         }
         assert got == expected, f"trial {trial}"
-        # r8: the opt-in local contraction must be label-invariant on
-        # the same random graphs, under a partitioning it didn't choose
+        # a cap of 4 overflows, so the partition-local contraction runs
+        # under a partitioning it didn't choose; labels must not change
+        contracted.clear()
         got_lc = {
             r["id"]: r["component"]
-            for r in connected_components(
-                pairs.repartition(5), nodes=nodes_df, driver_cap=cap,
-                local_contract=True,
+            for r in graph.connected_components(
+                pairs.repartition(5), nodes=nodes_df, driver_cap=4
             ).collect()
         }
-        assert got_lc == expected, f"trial {trial} (local_contract)"
+        assert got_lc == expected, f"trial {trial} (contracted)"
+        assert len(contracted) == 1, f"trial {trial}"
 
 
 def test_dedup_keep_canonical(spark):

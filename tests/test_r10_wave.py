@@ -9,16 +9,13 @@
    here are deterministic (plan-node + CacheManager-transition +
    value-parity assertions); GC-timing assertions were measured flaky
    (cleanup is async) and are deliberately absent.
-2. ``connected_components(local_contract=1)`` raises instead of
-   silently behaving as False (identity validation, r9 ADVICE).
-3. ``build_corpus_index`` ranks STRING doc ids on the distributed
+2. ``build_corpus_index`` ranks STRING doc ids on the distributed
    path (prefix-bucket rank) identically to the window path, and
    ``negative_sample`` accepts string doc ids end-to-end.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -98,23 +95,7 @@ def test_semantic_dedup_reuse_true_no_cache_manager_pin(spark):
 
 
 # ---------------------------------------------------------------------------
-# 2. local_contract identity validation
-
-
-def test_connected_components_rejects_int_local_contract(spark):
-    from mimic_iv_data_pipeline_spark.operators.graph import connected_components
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    # 1 == True in Python, so a membership check would let int 1 through
-    # and the later `is True` dispatch would silently treat it as False
-    with pytest.raises(ValueError, match="local_contract"):
-        connected_components(pairs, local_contract=1)
-    with pytest.raises(ValueError, match="local_contract"):
-        connected_components(pairs, local_contract=0)
-
-
-# ---------------------------------------------------------------------------
-# 3. string doc ids in the corpus index / negative_sample
+# 2. string doc ids in the corpus index / negative_sample
 
 
 def _string_docs(spark):
@@ -182,7 +163,7 @@ def test_corpus_index_numeric_distributed_matches_window(spark):
 
 
 # ---------------------------------------------------------------------------
-# 4. vectorized bucketed ANN scoring == expression path (r10)
+# 3. vectorized bucketed ANN scoring == expression path (r10)
 
 
 def _emb_fixture(spark, n=120, dims=8):
@@ -224,7 +205,7 @@ def test_ann_lsh_topk_pandas_score_matches_expr(spark):
 
 
 # ---------------------------------------------------------------------------
-# 5. sampled_matrix driver-transfer bound (r10 probe finding)
+# 4. sampled_matrix driver-transfer bound (r10 probe finding)
 
 
 def test_sampled_matrix_threshold_filter_preserves_exact_draw(spark):

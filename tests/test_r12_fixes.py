@@ -206,13 +206,13 @@ def _brute_clusters(pts, radius_m):
     return out
 
 
-def test_geo_clusters_clique_collapse_matches_brute_force(spark):
-    """r12 optimization pin: the fine-grid clique collapse must produce
-    EXACTLY the transitive-closure clusters. Adversarial shapes: a
-    dense pile (the k-squared clique the collapse exists for), a chain
-    crossing fine-cell boundaries (50 m steps, 100 m radius), an
-    antimeridian pair, isolated singletons, and a null-longitude row
-    (must stay a singleton, not pool with other nulls)."""
+def _geo_fixture(spark):
+    """``(points, brute-force clusters)`` for 100 m-radius adversarial
+    shapes: a dense pile (the k-squared clique the collapse exists
+    for), a chain crossing fine-cell boundaries (50 m steps, 100 m
+    radius), an antimeridian pair, isolated singletons, and
+    null-longitude rows (must stay singletons, not pool with other
+    nulls)."""
     pts = []
     # dense pile: 30 points within ~40 m of each other
     for k in range(30):
@@ -229,14 +229,20 @@ def test_geo_clusters_clique_collapse_matches_brute_force(spark):
     # two null-lon rows at the same latitude: must NOT merge
     pts.append((500, (20.0, None)))
     pts.append((501, (20.0, None)))
-
-    from mimic_iv_data_pipeline_spark.operators.geo import geo_clusters
-
     df = spark.createDataFrame(
         [(i, lat, lon) for i, (lat, lon) in pts],
         "id long, lat double, lon double",
     )
-    want = _brute_clusters(pts, 100.0)
+    return df, _brute_clusters(pts, 100.0)
+
+
+def test_geo_clusters_clique_collapse_matches_brute_force(spark):
+    """r12 optimization pin: the fine-grid clique collapse must produce
+    EXACTLY the transitive-closure clusters on the adversarial
+    fixture."""
+    from mimic_iv_data_pipeline_spark.operators.geo import geo_clusters
+
+    df, want = _geo_fixture(spark)
     # default driver_cap: the skew router sees a small clique mass and
     # takes the plain full-pair path
     got = {
@@ -260,6 +266,25 @@ def test_geo_clusters_clique_collapse_matches_brute_force(spark):
     assert got[300] == got[301]                          # seam pair merges
     assert got[400] == 400 and got[401] == 401
     assert got[500] == 500 and got[501] == 501           # nulls stay apart
+
+
+def test_geo_clusters_never_contracts_under_the_cap(spark, monkeypatch):
+    """geo_clusters' CC edges fit the default driver cap here, so CC
+    must union-find them without the partition-local contraction and
+    still return the brute-force clusters."""
+    from mimic_iv_data_pipeline_spark.operators import graph
+    from mimic_iv_data_pipeline_spark.operators.geo import geo_clusters
+
+    def no_contract(edges):
+        raise AssertionError("connected_components contracted under its cap")
+
+    monkeypatch.setattr(graph, "_local_contract", no_contract)
+    df, want = _geo_fixture(spark)
+    got = {
+        r["id"]: r["cluster_id"]
+        for r in geo_clusters(df, "id", "lat", "lon", radius_m=100.0).collect()
+    }
+    assert got == want
 
 
 def test_geo_clusters_large_radius_fallback_matches(spark):

@@ -219,14 +219,21 @@ def test_stream_lsh_dedup_rejects_degenerate_banding(spark):
         stream_lsh_dedup(docs, num_hashes=8, bands=3)
 
 
-@pytest.mark.parametrize("driver_cap", [1_000_000, 0])
-def test_connected_components_local_contract_parity(spark, driver_cap):
-    """local_contract=True must label identically on both paths —
-    including chains crossing partitions, duplicate/reversed edges,
-    self-loops, and isolated nodes (r8: the contraction runs BEFORE
-    canonicalization, so it must tolerate all raw-pair shapes)."""
-    from mimic_iv_data_pipeline_spark.operators.graph import connected_components
+@pytest.mark.parametrize("driver_cap", [1_000_000, 8, 0])
+def test_connected_components_local_contract_parity(spark, monkeypatch, driver_cap):
+    """Every path must label as union-find does — including chains
+    crossing partitions, duplicate/reversed edges, self-loops, and
+    isolated nodes. cap 8 overflows on these 59 raw pairs over 7
+    partitions, so the contraction runs on the RAW relation (before
+    canonicalization) and must tolerate all raw-pair shapes; the
+    roomy cap and cap 0 never contract."""
+    from mimic_iv_data_pipeline_spark.operators import graph
 
+    contracted = []
+    real = graph._local_contract
+    monkeypatch.setattr(
+        graph, "_local_contract", lambda e: contracted.append(1) or real(e)
+    )
     edges = (
         [(i, i + 1) for i in range(40)]          # 41-node chain
         + [(100 + a, 100 + b) for a in range(6) for b in range(a + 1, 6)]
@@ -235,20 +242,15 @@ def test_connected_components_local_contract_parity(spark, driver_cap):
     nodes = sorted({u for e in edges for u in e} | {999})
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"]).repartition(7)
     nodes_df = spark.createDataFrame([(i,) for i in nodes], ["id"])
-    base = {
+    got = {
         r["id"]: r["component"]
-        for r in connected_components(
+        for r in graph.connected_components(
             pairs, nodes=nodes_df, driver_cap=driver_cap
         ).collect()
     }
-    contracted = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            pairs, nodes=nodes_df, driver_cap=driver_cap, local_contract=True
-        ).collect()
-    }
-    assert contracted == base
-    assert contracted[40] == 0 and contracted[999] == 999
+    assert got == dict(graph._driver_union_find(edges + [(999, 999)]))
+    assert got[40] == 0 and got[999] == 999
+    assert len(contracted) == (1 if driver_cap == 8 else 0)
 
 
 # --- plan_inventory.compare (pure function) ----------------------------

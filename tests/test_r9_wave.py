@@ -91,40 +91,42 @@ def test_local_contract_chunked_output_parity(spark):
     assert {tuple(r) for r in got.collect()} == expect
 
 
-def test_connected_components_auto_contract_retry(spark):
-    """local_contract='auto' (the new default): small graphs take the
-    driver fast path with NO contraction pass; a graph whose raw
-    canonical set overflows driver_cap gets contracted once and
-    retried — K6 (15 canonical edges, cap=8) contracts to a ≤5-row
-    star forest per partition, which fits. Labels must equal the
-    explicit True/False paths in all modes."""
-    from mimic_iv_data_pipeline_spark.operators.graph import (
-        connected_components,
-    )
+def test_connected_components_auto_contract_retry(spark, monkeypatch):
+    """Contraction is reached only by overflowing driver_cap. K6 plus
+    one extra edge is 16 canonical edges; on one partition its star
+    forest is 6 edges. cap 8: the raw set overflows, contract once and
+    the forest fits the union-find. cap 1: the forest overflows too, so
+    the star rounds run on it. cap 0: the star rounds run on the raw
+    edges, never contracted. Labels equal union-find's every time."""
+    from mimic_iv_data_pipeline_spark.operators import graph
 
+    calls = {"contract": 0, "star": 0}
+    real_contract, real_star = graph._local_contract, graph._star
+
+    def contract(edges):
+        calls["contract"] += 1
+        return real_contract(edges)
+
+    def star(edges, large):
+        calls["star"] += 1
+        return real_star(edges, large)
+
+    monkeypatch.setattr(graph, "_local_contract", contract)
+    monkeypatch.setattr(graph, "_star", star)
     k6 = [(i, j) for i in range(6) for j in range(6) if i < j]  # 15 edges
     pairs = spark.createDataFrame(
         k6 + [(10, 11)], "id_a bigint, id_b bigint"
-    ).coalesce(1)
+    ).repartition(1)
     expect = sorted([(i, 0) for i in range(6)] + [(10, 10), (11, 10)])
-    for mode in ("auto", True, False):
+    for cap, contracts, stars in ((8, 1, False), (1, 1, True), (0, 0, True)):
+        calls.update(contract=0, star=0)
         got = sorted(
             tuple(r)
-            for r in connected_components(
-                pairs, driver_cap=8, local_contract=mode
-            ).collect()
+            for r in graph.connected_components(pairs, driver_cap=cap).collect()
         )
-        assert got == expect, f"mode={mode}"
-    # auto with cap=0 (forced distributed) pre-contracts; labels equal
-    got = sorted(
-        tuple(r)
-        for r in connected_components(
-            pairs, driver_cap=0, local_contract="auto"
-        ).collect()
-    )
-    assert got == expect
-    with pytest.raises(ValueError, match="local_contract"):
-        connected_components(pairs, local_contract="yes")
+        assert got == expect, f"cap={cap}"
+        assert calls["contract"] == contracts, f"cap={cap}"
+        assert (calls["star"] > 0) == stars, f"cap={cap}"
 
 
 def test_build_vocab_distributed_rank_matches_alphabetical(spark):
